@@ -40,7 +40,7 @@ from .params import (
     ScreenParams,
 )
 from .plans.pipeline import interaction_report
-from .session import get_spark
+from .session import get_spark, keep, owned
 from .sources.af3_json import read_pae_long, read_summary_confidences
 from .sources.cif import chains_from_atoms, read_atoms
 
@@ -100,6 +100,21 @@ def build_parser() -> argparse.ArgumentParser:
 
 
 def run(args: argparse.Namespace, spark: SparkSession | None = None) -> dict:
+    """Run one CLI invocation. Everything it persists is released when it
+    returns or raises, so repeated runs on a borrowed ``spark`` pin no
+    blocks; a session it created itself is stopped."""
+    own_session = spark is None
+    if own_session:
+        spark = get_spark("af3spark-cli")
+    try:
+        with owned():
+            return _run(args, spark)
+    finally:
+        if own_session:
+            spark.stop()
+
+
+def _run(args: argparse.Namespace, spark: SparkSession) -> dict:
     params = ScreenParams(
         poi_chain=args.poi_chain,
         partner_chain=args.partner_chain,
@@ -111,9 +126,6 @@ def run(args: argparse.Namespace, spark: SparkSession | None = None) -> dict:
     )
     out_root = args.output_dir or args.input_dir
     os.makedirs(out_root, exist_ok=True)
-    own_session = spark is None
-    if own_session:
-        spark = get_spark("af3spark-cli")
 
     if args.watch or args.watch_once:
         from .streaming.ingest import watch_summaries
@@ -132,8 +144,6 @@ def run(args: argparse.Namespace, spark: SparkSession | None = None) -> dict:
         else:
             q.awaitTermination()
         n = spark.read.parquet(out_path).count() if os.path.exists(out_path) else 0
-        if own_session:
-            spark.stop()
         return {"csv": None, "n_binders": n, "n_report_rows": None,
                 "interaction_cifs": 0, "overlay_files": 0,
                 "stream_out": out_path}
@@ -142,8 +152,6 @@ def run(args: argparse.Namespace, spark: SparkSession | None = None) -> dict:
         from .plans.ingest import ingest_corpus
 
         paths = ingest_corpus(spark, args.input_dir, args.ingest)
-        if own_session:
-            spark.stop()
         return {"csv": None, "n_binders": None, "n_report_rows": None,
                 "interaction_cifs": 0, "overlay_files": 0, "tables": paths}
 
@@ -162,9 +170,9 @@ def run(args: argparse.Namespace, spark: SparkSession | None = None) -> dict:
 
     # shared subplans computed ONCE, reused across report + sinks
     # (reference recomputed them per output path — inefficiencies I1/I2)
-    binders = screen_binders(preds, params).cache()
+    binders = keep(screen_binders(preds, params))
     interacting = identify_interacting_residues(pae, chains, params, jobs=binders)
-    contacts = contact_pairs_grid(atoms, interacting, params).cache()
+    contacts = keep(contact_pairs_grid(atoms, interacting, params))
 
     report = interaction_report(preds, chains, pae, atoms, params, contacts=contacts)
     if getattr(args, "distributed_csv", False):
@@ -253,9 +261,6 @@ def run(args: argparse.Namespace, spark: SparkSession | None = None) -> dict:
             rmsd_pdf.to_csv(rmsd_path, index=False)
             result["rmsd_csv"] = rmsd_path
             result["rmsd_rows"] = len(rmsd_pdf)
-
-    if own_session:
-        spark.stop()
     return result
 
 

@@ -98,7 +98,7 @@ from pyspark.sql import functions as F
 
 from .operators import dedup, similarity, text
 from .plans import corpus as corpus_plans
-from .session import get_spark
+from .session import get_spark, owned
 
 
 def build_parser() -> argparse.ArgumentParser:
@@ -872,11 +872,7 @@ def build_parser() -> argparse.ArgumentParser:
     return p
 
 
-def _result(
-    args: argparse.Namespace,
-    spark: SparkSession,
-    handles: list | None = None,
-) -> DataFrame:
+def _result(args: argparse.Namespace, spark: SparkSession) -> DataFrame:
     if args.command == "kmeans":
         emb = spark.read.parquet(args.embeddings)
         return similarity.kmeans(
@@ -889,8 +885,7 @@ def _result(
     if args.command == "semdedup":
         emb = spark.read.parquet(args.embeddings)
         return dedup.semantic_dedup(
-            emb, k=args.clusters, iters=args.iters, eps=args.eps,
-            handles=handles,
+            emb, k=args.clusters, iters=args.iters, eps=args.eps
         )
 
     if args.command == "media-stats":
@@ -1773,26 +1768,25 @@ def _result(
 def run(args: argparse.Namespace, spark: SparkSession | None = None) -> dict:
     owns = spark is None
     spark = spark or get_spark("corpus-cli")
-    handles: list = []
     try:
-        out = _result(args, spark, handles=handles)
-        if args.command == "interleave":
-            # ordered-shard write: range partitioning + within-shard sort
-            # (a plain write would lose the curriculum order)
-            from .sources.layout import write_ordered_shards
+        # operator-staged blocks are released once the output is on
+        # disk — run() may be called many times against a borrowed
+        # session
+        with owned():
+            out = _result(args, spark)
+            if args.command == "interleave":
+                # ordered-shard write: range partitioning + within-shard
+                # sort (a plain write would lose the curriculum order)
+                from .sources.layout import write_ordered_shards
 
-            write_ordered_shards(
-                out, args.out, "order_key", n_shards=args.shards
-            )
-        else:
-            out.write.mode("overwrite").parquet(args.out)
-        n = spark.read.parquet(args.out).count()
-        return {"command": args.command, "rows": n, "out": args.out}
+                write_ordered_shards(
+                    out, args.out, "order_key", n_shards=args.shards
+                )
+            else:
+                out.write.mode("overwrite").parquet(args.out)
+            n = spark.read.parquet(args.out).count()
+            return {"command": args.command, "rows": n, "out": args.out}
     finally:
-        # release operator-staged blocks now the output is on disk —
-        # run() may be called many times against a borrowed session
-        for h in handles:
-            h.unpersist()
         if owns:
             spark.stop()
 

@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import keep
 from .util import spread
 
 # --------------------------------------------------------------------------
@@ -1500,12 +1501,11 @@ def connected_components(
     # recomputed — checkpointing edges and labels from the raw plan was
     # measured to re-run a Jaccard pair join three times.
     #
-    # Checkpoints here are LAZY (graph._ckpt; SPARK_GRAFT_EAGER_CKPT=1
-    # restores eager for paired A/Bs): each RDD still persists at its
-    # FIRST materialization — the convergence count below provides the
-    # materialization cadence — so the pair generator still runs once,
-    # but setup + uncounted rounds no longer pay one blocking job
-    # barrier each (r15 fixed-floor audit: 35 jobs for one
+    # Checkpoints here are LAZY (graph._ckpt): each RDD still persists
+    # at its FIRST materialization — the convergence count below
+    # provides the materialization cadence — so the pair generator
+    # still runs once, but setup + uncounted rounds no longer pay one
+    # blocking job barrier each (r15 fixed-floor audit: 35 jobs for one
     # dedup_clusters build; guide §2.4, remove gratuitous barriers).
     fwd = _ckpt(pairs.select(F.col(src).alias("u"), F.col(dst).alias("v")))
     und = fwd.union(fwd.select(F.col("v").alias("u"), F.col("u").alias("v")))
@@ -1761,7 +1761,6 @@ def semantic_dedup(
     iters: int = 2,
     eps: float = 0.7,
     id_col: str = "vec_id",
-    handles: list | None = None,
 ) -> DataFrame:
     """(vec_id, cluster, sim, kept) — SemDeDup-style semantic
     deduplication (Abbas et al. 2023, "SemDeDup" — public technique):
@@ -1798,21 +1797,16 @@ def semantic_dedup(
         k=k,
         iters=iters,
         keep_vec=True,
-        handles=handles,
     )
     # Persist the assignment: the pair stage references it twice (both
     # self-join sides) and the final keep-flag join a third time —
     # unpersisted, Spark re-runs the full Lloyd iteration subtree for
     # every reference (measured ~2.5x on this operator). persist() is
     # lazy (plan construction stays job-free for the analysis-only
-    # schema/plan-lint tests, unlike localCheckpoint) and the blocks
-    # are CALLER-OWNED under the same ``handles`` contract as
-    # clean_corpus: pass a list to receive the persisted DataFrame and
-    # unpersist it once the output has materialised (otherwise repeated
-    # invocations in one session accumulate pinned blocks).
-    av = av0.persist()
-    if handles is not None:
-        handles.append(av)
+    # schema/plan-lint tests, unlike localCheckpoint); the caller's
+    # session.owned() scope releases it, as it does the projection
+    # kmeans keeps.
+    av = keep(av0)
     a1 = av.select(
         "cluster", F.col("vec_id").alias("id_a"), F.col("v").alias("va")
     )

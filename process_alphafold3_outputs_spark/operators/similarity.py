@@ -20,6 +20,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.vec import cosine, dot as _dot  # noqa: F401  (re-exported)
+from ..session import keep
 from .util import spread
 
 
@@ -314,17 +315,6 @@ def _vec_proj(embeddings: DataFrame) -> DataFrame:
     )
 
 
-def _persist_proj(df: DataFrame) -> DataFrame:
-    """persist() unless ``SPARK_GRAFT_NO_VEC_PERSIST`` is set — the
-    paired-A/B escape hatch for the shared-projection persist
-    (tools/ab_env.py)."""
-    import os
-
-    if os.environ.get("SPARK_GRAFT_NO_VEC_PERSIST"):
-        return df
-    return df.persist()
-
-
 def ivf_centroids(
     embeddings: DataFrame, n_cells: int = 16, _proj: DataFrame | None = None
 ) -> DataFrame:
@@ -443,7 +433,6 @@ def kmeans(
     iters: int = 2,
     train_sample_mod: int = 1,
     keep_vec: bool = False,
-    handles: list | None = None,
 ) -> DataFrame:
     """(vec_id, cluster, sim[, v]) — deterministic Lloyd k-means over the
     embedding column: seed = the first ``k`` corpus vectors by id
@@ -474,14 +463,11 @@ def kmeans(
     pick, every Lloyd pass and the final assignment (guide §5: Lloyd
     re-scans the corpus iters+1 times otherwise — the DuckDB oracle
     unrolls the same arithmetic either way, so sharing the scan is
-    plan-shape only, value-exact). Persist lifecycle is CALLER-OWNED
-    under the same ``handles`` contract as ``clean_corpus``: pass a
-    list to receive the persisted DataFrame and unpersist once the
-    output has materialised; the bench/mirror harnesses release all
-    pinned blocks between runs."""
-    emb = _persist_proj(_vec_proj(embeddings))
-    if handles is not None:
-        handles.append(emb)
+    plan-shape only, value-exact). The persist is released by the
+    caller's :func:`..session.owned` scope, same contract as
+    ``clean_corpus``: run the call and the consumer of its output
+    inside the scope."""
+    emb = keep(_vec_proj(embeddings))
     cents = ivf_centroids(embeddings, k, _proj=emb)
     for _ in range(iters):
         cents = ivf_refine(
@@ -519,7 +505,6 @@ def topk_ivf(
     n_probe: int = 2,
     refine_iters: int = 0,
     train_sample_mod: int = 1,
-    handles: list | None = None,
 ) -> DataFrame:
     """IVF top-k: queries probe their ``n_probe`` closest cells and rank
     only those cells' vectors. The inverted lists are the corpus
@@ -534,11 +519,11 @@ def topk_ivf(
     The (vec_id, vec) projection is PERSISTED once and feeds the seed
     pick, every refine pass, the corpus assignment AND the query-side
     slice (3 + refine_iters corpus scans shared into one — guide §5;
-    value-exact, the arithmetic is untouched). ``handles``: caller-owned
-    release, same contract as :func:`kmeans`."""
-    emb = _persist_proj(_vec_proj(embeddings))
-    if handles is not None:
-        handles.append(emb)
+    value-exact, the arithmetic is untouched), released by the caller's
+    :func:`..session.owned` scope, same contract as :func:`kmeans`.
+    A Column ``query_ids`` filters that projection, so it may reference
+    only ``vec_id`` and ``vec``."""
+    emb = keep(_vec_proj(embeddings))
     cents = ivf_centroids(embeddings, n_cells, _proj=emb)
     for _ in range(refine_iters):
         cents = ivf_refine(
@@ -915,7 +900,6 @@ def topk_ivfpq(
     m: int = 8,
     kc: int = 16,
     dim: int | None = None,
-    handles: list | None = None,
 ) -> DataFrame:
     """(query_id, neighbor_id, rk, sim) — IVF-PQ with RESIDUAL
     encoding (IVFADC, Jégou et al. 2011 §IV): the production ANN
@@ -946,9 +930,7 @@ def topk_ivfpq(
     :func:`ivfpq_search` (serve over a prebuilt index) — the
     build-once/serve-many split, same contract as
     ``ivf_search``/``watch_embeddings_ann``."""
-    cents, cb, codes = ivfpq_index(
-        embeddings, n_cells, m, kc, dim, handles=handles
-    )
+    cents, cb, codes = ivfpq_index(embeddings, n_cells, m, kc, dim)
     if isinstance(query_ids, Column):
         q = spread(embeddings, "vec_id").filter(query_ids)
     else:
@@ -964,7 +946,6 @@ def ivfpq_index(
     m: int = 8,
     kc: int = 16,
     dim: int | None = None,
-    handles: list | None = None,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """(centroids, codebooks, codes) — the persistable IVF-PQ index
     build: centroids (cell, ccvec over NORMALIZED vectors), residual
@@ -973,13 +954,12 @@ def ivfpq_index(
     parquet (codes bucketed by cell) and serve with
     :func:`ivfpq_search`; the floats never travel again.
 
-    ``handles`` is accepted for API symmetry with :func:`kmeans` but
-    currently receives nothing: persisting the ``nrm``/``assigned``
-    fan-out points was paired-A/B MEASURED A LOSS here (r15:
-    topk_ivfpq 3.72 s persisted vs 2.83 s not, recall_ivfpq 3.07 vs
-    2.80 — only 2-3 references each, the materialization barrier costs
-    more than the re-computed subtree, unlike kmeans' iters+1 passes),
-    so the index build stays barrier-free."""
+    Unlike :func:`kmeans`, the build persists nothing: persisting the
+    ``nrm``/``assigned`` fan-out points was paired-A/B MEASURED A LOSS
+    here (r15: topk_ivfpq 3.72 s persisted vs 2.83 s not, recall_ivfpq
+    3.07 vs 2.80 — only 2-3 references each, the materialization
+    barrier costs more than the re-computed subtree, unlike kmeans'
+    iters+1 passes), so the index build stays barrier-free."""
     from ..sources.tables import EMBEDDING_DIM
 
     d = dim if dim is not None else EMBEDDING_DIM

@@ -9,6 +9,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import keep, owned
 from .dedup import normalized
 from .util import spread
 
@@ -2440,9 +2441,8 @@ def fit_quality_classifier(
     The DuckDB oracle (`text_classifier_train`) unrolls the iterations
     as CTE pairs and reproduces every weight bit-for-bit."""
     spark = docs.sparkSession
-    feats = classifier_features(docs, positive, dim, seed, text_col)
-    feats = feats.persist()
-    try:
+    with owned():
+        feats = keep(classifier_features(docs, positive, dim, seed, text_col))
         n = feats.filter(F.col("bucket") == -1).count()  # one row per doc
         if n == 0:
             return [0.0] * dim, 0.0
@@ -2480,8 +2480,6 @@ def fit_quality_classifier(
                 )
                 for b in range(-1, dim)
             }
-    finally:
-        feats.unpersist()
     return [w[b] for b in range(dim)], w[-1]
 
 

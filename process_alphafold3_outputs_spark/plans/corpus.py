@@ -20,13 +20,12 @@ direct pair links them, e.g. edges 2—3 and 1—3 keep both 1 and 2).
 
 from __future__ import annotations
 
-from contextlib import contextmanager
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators import dedup, text
 from ..operators.util import spread
+from ..session import keep
 
 #: near_dedup="auto" probe decisions, keyed by the input plan's
 #: semanticHash + a DATA fingerprint (the scan's input-file listing) +
@@ -157,7 +156,6 @@ def clean_corpus(
     text_col: str = "text",
     stage: bool = True,
     full_rows: bool = False,
-    handles: list[DataFrame] | None = None,
     near_dedup: str = "auto",
     n_bands: int = 4,
     rows_per_band: int = 3,
@@ -221,11 +219,10 @@ def clean_corpus(
     from writing survivors to a staging table (the ingest-once
     pattern); persist() is the single-session form.
 
-    Persist lifecycle is CALLER-OWNED: the staged blocks stay pinned
-    until the caller releases them — pass ``handles`` (a list that
-    receives each persisted DataFrame) and unpersist after the output
-    materialises, or use :func:`staged_clean_corpus` /
-    :func:`staged_corpus_to_training`, which do it on context exit.
+    The staged blocks are persisted with :func:`..session.keep`: run
+    the call and the consumer of its output inside
+    :func:`..session.owned`, which unpersists them on exit. Outside any
+    scope they stay pinned until the session's cache is cleared.
 
     ``project`` (internal narrow path — also what ``full_rows=False``
     now routes through with ``project=["doc_id"]``): carry ONLY the
@@ -302,9 +299,7 @@ def clean_corpus(
     # two jobs materialize the very blocks the pipeline then reuses
     # (probe cost amortizes to ~zero instead of adding a corpus pass)
     if stage:
-        exact_kept = exact_kept.persist()
-        if handles is not None:
-            handles.append(exact_kept)
+        exact_kept = keep(exact_kept)
     if near_dedup == "auto":
         # probe the population the near-dup stage actually sees: the
         # post-gate, post-exact-dedup survivors (judge-advice r8 — raw-
@@ -350,9 +345,7 @@ def clean_corpus(
             exact_kept, text_col=kernel_text, spread_input=False
         )
         if stage:
-            shingles = shingles.persist()
-            if handles is not None:
-                handles.append(shingles)
+            shingles = keep(shingles)
         # prefix_filter=True explicitly, for the same two reasons as the
         # greedy mode below: the corpus-scale pipeline always carries
         # the pigeonhole hot-shingle insurance (one boilerplate shingle
@@ -376,9 +369,7 @@ def clean_corpus(
             exact_kept, text_col=kernel_text, spread_input=False
         )
         if stage:
-            shingles = shingles.persist()
-            if handles is not None:
-                handles.append(shingles)
+            shingles = keep(shingles)
         # prefix_filter=True explicitly: the corpus-scale pipeline always
         # carries the PPJoin skew insurance AND keeps plan construction
         # fully lazy (prefix_filter=None would fire the skew-probe jobs at
@@ -425,7 +416,6 @@ def corpus_to_training(
     val_pct: int = 10,
     text_col: str = "text",
     stage: bool = True,
-    handles: list[DataFrame] | None = None,
     near_dedup: str = "auto",
 ) -> DataFrame:
     """The full clean → chunk → split DAG a training-data pipeline
@@ -457,7 +447,6 @@ def corpus_to_training(
         jaccard_threshold=jaccard_threshold,
         text_col=text_col,
         stage=stage,
-        handles=handles,
         near_dedup=near_dedup,
         project=["doc_id"],
     )
@@ -465,33 +454,6 @@ def corpus_to_training(
         surv, chunk_tokens=chunk_tokens, overlap=overlap, text_col="_norm"
     )
     return chunks.withColumn("split", text.split_col(val_pct))
-
-
-@contextmanager
-def staged_clean_corpus(docs: DataFrame, **kwargs):
-    """Context-managed :func:`clean_corpus(stage=True)`: yields the
-    survivors DataFrame and unpersists the staged fan-out points on
-    exit — no pinned storage outlives the consumer (session hygiene at
-    scale; a leaked multi-GB persist per pipeline run eventually evicts
-    useful blocks)."""
-    handles: list[DataFrame] = []
-    try:
-        yield clean_corpus(docs, stage=True, handles=handles, **kwargs)
-    finally:
-        for df in handles:
-            df.unpersist()
-
-
-@contextmanager
-def staged_corpus_to_training(docs: DataFrame, **kwargs):
-    """Context-managed :func:`corpus_to_training`: unpersists the staged
-    fan-out points on exit."""
-    handles: list[DataFrame] = []
-    try:
-        yield corpus_to_training(docs, stage=True, handles=handles, **kwargs)
-    finally:
-        for df in handles:
-            df.unpersist()
 
 
 def curate_corpus(
@@ -602,7 +564,6 @@ def filter_audit(
     jaccard_threshold: float = 0.8,
     text_col: str = "text",
     stage: bool = True,
-    handles: list[DataFrame] | None = None,
 ) -> DataFrame:
     """(doc_id, n_words, pred_lang, pass_quality, pass_language,
     pass_exact, pass_near, kept, dropped_at) — the per-document
@@ -622,10 +583,11 @@ def filter_audit(
 
     Scale shape: the flags are pure columns on ONE corpus pass — the
     normalize + language-id stats projection is built here once,
-    persisted (``stage=True``; caller-owned release via ``handles``,
-    same contract as :func:`clean_corpus`), and SHARED with the
-    internal :func:`clean_corpus` call through its ``_base`` hook, so
-    the audit no longer runs the corpus CPU pass twice (guide §2.4;
+    persisted (``stage=True``; released by the caller's
+    :func:`..session.owned` scope, same contract as
+    :func:`clean_corpus`), and SHARED with the internal
+    :func:`clean_corpus` call through its ``_base`` hook, so the audit
+    no longer runs the corpus CPU pass twice (guide §2.4;
     the r14 A/B of the window-form alternative was a local wash — this
     form instead removes the duplicate normalize pass outright, which
     is the term that grows with text bytes at 100 TB). The extra cost
@@ -650,16 +612,9 @@ def filter_audit(
     )
     # the stats projection is the audit's fan-out point (flag columns,
     # keeper agg, and — via _base — the whole survivor pipeline); stage
-    # it so the corpus parquet is scanned and normalized exactly once.
-    # SPARK_GRAFT_NO_BASE_SHARE=1 restores the independent-pass form
-    # (paired-A/B hatch, tools/ab_env.py).
-    import os as _os
-
-    _share = not _os.environ.get("SPARK_GRAFT_NO_BASE_SHARE")
-    if stage and _share:
-        base = base.persist()
-        if handles is not None:
-            handles.append(base)
+    # it so the corpus parquet is scanned and normalized exactly once
+    if stage:
+        base = keep(base)
     surv12 = base.filter(
         (F.col("pass_quality") == 1) & (F.col("pass_language") == 1)
     )
@@ -673,8 +628,7 @@ def filter_audit(
             jaccard_threshold=jaccard_threshold,
             text_col=text_col,
             stage=stage,
-            handles=handles,
-            _base=base if _share else None,
+            _base=base,
         )
         .select("doc_id")
         .withColumn("_kept", F.lit(1))
@@ -732,7 +686,6 @@ def token_report(
     seed: str = "epoch-v1",
     text_col: str = "text",
     stage: bool = True,
-    handles: list[DataFrame] | None = None,
 ) -> DataFrame:
     """(source, raw_docs, raw_tokens, clean_docs, clean_tokens,
     train_tokens) — the token-budget ledger of a training mix: what
@@ -751,23 +704,18 @@ def token_report(
     profile) collapsing to source-sized tables, joined source-to-source
     — the expansion itself is never materialized. The normalize+LID
     stats projection is built ONCE, persisted (``stage=True``;
-    caller-owned release via ``handles``) and shared between the raw
-    profile and the survivor pipeline (clean_corpus ``_base`` hook) —
-    the raw profile previously re-ran the full-corpus normalize pass
-    beside the pipeline's own (r15, guide §2.4; same fix as
-    :func:`filter_audit`)."""
-    import os as _os
-
-    _share = not _os.environ.get("SPARK_GRAFT_NO_BASE_SHARE")
+    released by the caller's :func:`..session.owned` scope) and shared
+    between the raw profile and the survivor pipeline (clean_corpus
+    ``_base`` hook) — the raw profile previously re-ran the full-corpus
+    normalize pass beside the pipeline's own (r15, guide §2.4; same fix
+    as :func:`filter_audit`)."""
     stats = (
         dedup.normalized(spread(docs, "doc_id"), text_col)
         .withColumn("n_ws_tokens", F.size(F.split("_norm", " ")).cast("long"))
         .withColumn("pred_lang", text.language_id_col(F.col("_norm")))
     )
-    if stage and _share:
-        stats = stats.persist()
-        if handles is not None:
-            handles.append(stats)
+    if stage:
+        stats = keep(stats)
     raw = (
         stats.select("source", F.col("n_ws_tokens").alias("_n"))
         .groupBy("source")
@@ -786,9 +734,8 @@ def token_report(
         jaccard_threshold=jaccard_threshold,
         text_col=text_col,
         stage=stage,
-        handles=handles,
         project=["source"],
-        _base=stats if _share else None,
+        _base=stats,
     )
     kv = []
     for k, v in factors.items():

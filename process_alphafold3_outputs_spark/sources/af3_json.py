@@ -22,6 +22,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..session import keep
+
 SUMMARY_SCHEMA = T.StructType(
     [
         T.StructField("iptm", T.DoubleType()),
@@ -88,7 +90,7 @@ def read_summary_confidences(
         # Spark refuses _corrupt_record-only queries on an uncached JSON
         # scan; summary docs are ~100 B/job, so caching the screen input
         # is cheap even at full-corpus scale.
-        df = df.cache()
+        df = keep(df)
     # job from the captured _path column — input_file_name() evaluates
     # empty once rows come from cache instead of the file scan.
     ok = (
@@ -258,7 +260,7 @@ def read_summary_errors(spark: SparkSession, input_dir: str) -> DataFrame:
     JSON parse rejected — (path, raw_prefix). A distributed engine
     cannot grep a driver log; the errors ARE a queryable side output
     (SURVEY §2 O35: 'per-row error tracking as an errors DataFrame')."""
-    df = (
+    df = keep(
         spark.read.schema(SUMMARY_SCHEMA)
         .option("multiLine", "true")
         .option("mode", "PERMISSIVE")
@@ -268,7 +270,6 @@ def read_summary_errors(spark: SparkSession, input_dir: str) -> DataFrame:
         .json(input_dir)
         .withColumn("_path", F.input_file_name())
         .filter(~F.col("_path").rlike(r"/\._"))
-        .cache()
     )
     return df.filter(F.col("_corrupt_record").isNotNull()).select(
         F.col("_path").alias("path"),

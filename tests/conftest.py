@@ -100,14 +100,27 @@ _ORACLE_PARAM = __import__("re").compile(
 
 
 def pytest_collection_modifyitems(config, items):
+    modules = {}
     for item in items:
         short = item.nodeid.split("/")[-1]
+        if getattr(item, "module", None) is not None:
+            modules[short.split("::")[0]] = item.module
         m = _ORACLE_PARAM.search(short)
         if m is not None:
             if m.group(1) not in _VISIBLE_QUERIES:
                 item.add_marker(pytest.mark.slow)
         elif short in SLOW_TESTS:
             item.add_marker(pytest.mark.slow)
+    # an entry left behind by a renamed test lets the new name run in
+    # the default tier unnoticed: every entry whose file was collected
+    # must still name a test function in that file
+    stale = []
+    for entry in sorted(SLOW_TESTS):
+        file, _, name = entry.partition("::")
+        if file in modules and not hasattr(modules[file], name.split("[")[0]):
+            stale.append(entry)
+    if stale:
+        raise pytest.UsageError(f"SLOW_TESTS names missing tests: {stale}")
 
 
 @pytest.fixture(scope="session")

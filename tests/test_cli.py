@@ -8,6 +8,10 @@ from process_alphafold3_outputs_spark.cli import build_parser, run
 from process_alphafold3_outputs_spark.fixtures import write_file_corpus
 
 
+def _persisted(spark) -> set:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
+
+
 def test_cli_end_to_end(spark, tmp_path):
     corpus_dir = str(tmp_path / "corpus")
     out_dir = str(tmp_path / "out")
@@ -16,7 +20,10 @@ def test_cli_end_to_end(spark, tmp_path):
     args = build_parser().parse_args(
         ["-id", corpus_dir, "--output-dir", out_dir, "-pae", "15.0"]
     )
+    before = _persisted(spark)
     result = run(args, spark=spark)
+    # run() owns what it persists: a borrowed session keeps no blocks
+    assert _persisted(spark) - before == set()
 
     assert result["n_binders"] > 0
     csv = os.path.join(out_dir, "interaction_analysis_PAE_15.0_max_dist_8.0.csv")
@@ -209,11 +216,14 @@ def test_cli_distributed_csv_sink(spark, tmp_path):
 
 def test_corpus_cli_commands_roundtrip(spark, tmp_path):
     """Each corpus_cli command writes parquet whose rows equal the
-    library operator's own output — the CLI is a pure shell."""
+    library operator's own output — the CLI is a pure shell — and
+    leaves no persisted RDD behind on the borrowed session."""
     from pyspark.sql import functions as F
 
     from process_alphafold3_outputs_spark import corpus_cli
     from process_alphafold3_outputs_spark.operators import dedup, text
+    from process_alphafold3_outputs_spark.plans import corpus as corpus_plans
+    from process_alphafold3_outputs_spark.session import owned
 
     sf = "/root/testdata/sf0.001"
     docs_path = f"{sf}/documents.parquet"
@@ -222,7 +232,10 @@ def test_corpus_cli_commands_roundtrip(spark, tmp_path):
 
     def run_cmd(argv):
         args = corpus_cli.build_parser().parse_args(argv)
-        return corpus_cli.run(args, spark)
+        before = _persisted(spark)
+        res = corpus_cli.run(args, spark)
+        assert _persisted(spark) - before == set(), argv[0]
+        return res
 
     out = str(tmp_path / "stats")
     res = run_cmd(["stats", "--documents", docs_path, "--out", out])
@@ -256,6 +269,27 @@ def test_corpus_cli_commands_roundtrip(spark, tmp_path):
          "--out", out]
     )
     assert res["rows"] == spark.read.parquet(emb_path).count()
+
+    out = str(tmp_path / "semdedup")
+    res = run_cmd(
+        ["semdedup", "--embeddings", emb_path, "-k", "4", "--iters", "1",
+         "--out", out]
+    )
+    assert res["rows"] == spark.read.parquet(emb_path).count()
+
+    out = str(tmp_path / "clean")
+    res = run_cmd(["clean", "--documents", docs_path, "--out", out])
+    with owned():
+        assert res["rows"] == corpus_plans.clean_corpus(docs).count() > 0
+
+    out = str(tmp_path / "training")
+    res = run_cmd(["training", "--documents", docs_path, "--out", out])
+    with owned():
+        assert res["rows"] == corpus_plans.corpus_to_training(docs).count() > 0
+
+    out = str(tmp_path / "audit")
+    res = run_cmd(["audit", "--documents", docs_path, "--out", out])
+    assert res["rows"] == docs.count()
 
     out = str(tmp_path / "pack")
     res = run_cmd(

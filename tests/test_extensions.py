@@ -1996,37 +1996,27 @@ def test_dup_rate_by_group_hand_computed(spark):
     )
 
 
-def test_connected_components_lazy_ckpt_matches_eager(spark, monkeypatch):
-    """r15: CC's per-round/setup localCheckpoints are lazy by default
-    (graph._ckpt — the convergence count provides the materialization
-    cadence); SPARK_GRAFT_EAGER_CKPT=1 restores the eager barriers.
-    Labels must be bit-identical either way."""
+def test_connected_components_lazy_ckpt_labels(spark):
+    """r15: CC's per-round/setup localCheckpoints are lazy (graph._ckpt —
+    the convergence count provides the materialization cadence); with
+    an amortized check every component still gets its minimum id."""
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(20)] + [(50, 51), (51, 52), (60, 61)],
         "doc_a long, doc_b long",
     )
-    monkeypatch.delenv("SPARK_GRAFT_EAGER_CKPT", raising=False)
-    lazy = {
+    labels = {
         r.doc_id: r.cluster_id
         for r in dedup.connected_components(pairs, check_every=2).collect()
     }
-    monkeypatch.setenv("SPARK_GRAFT_EAGER_CKPT", "1")
-    eager = {
-        r.doc_id: r.cluster_id
-        for r in dedup.connected_components(pairs, check_every=2).collect()
-    }
-    assert lazy == eager
-    assert lazy[52] == 50 and lazy[61] == 60 and lazy[20] == 0
+    assert labels[52] == 50 and labels[61] == 60 and labels[20] == 0
 
 
-def test_hot_probe_cache_returns_cached_verdict_and_invalidates(spark):
+def test_hot_probe_cache_returns_cached_verdict_and_invalidates(spark, sf_dir):
     """r15: has_hot_shingle memoizes its VERDICT per (plan, input files,
     params) — a plan-choice decision, never a query result. The cached
     verdict must equal a fresh recompute, and clear_hot_probe_cache()
     must force the recompute path."""
-    sh = dedup.hashed_shingles(
-        spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    )
+    sh = dedup.hashed_shingles(spark.read.parquet(f"{sf_dir}/documents.parquet"))
     dedup.clear_hot_probe_cache()
     v1 = dedup.has_hot_shingle(sh)
     key = dedup._probe_key(sh, "hot_shingle", 20, 0.05)
@@ -2044,24 +2034,23 @@ def test_hot_probe_cache_returns_cached_verdict_and_invalidates(spark):
     assert dedup._probe_key(mem, "hot_shingle", 20, 0.05) is None
 
 
-def test_kmeans_persisted_projection_matches_unpersisted(spark, monkeypatch):
+def test_kmeans_persisted_projection_released_by_owned(spark, sf_dir):
     """r15: kmeans persists the (vec_id, vec) projection once and feeds
-    every Lloyd pass from it; SPARK_GRAFT_NO_VEC_PERSIST=1 disables the
-    persist (A/B hatch). Assignments must be identical, and the handles
-    contract must hand back the persisted DataFrame for release."""
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    monkeypatch.delenv("SPARK_GRAFT_NO_VEC_PERSIST", raising=False)
-    handles: list = []
-    on = {
-        r.vec_id: (r.cluster, r.sim)
-        for r in similarity.kmeans(emb, k=4, iters=2, handles=handles).collect()
-    }
-    assert len(handles) == 1
-    for h in handles:
-        h.unpersist()
-    monkeypatch.setenv("SPARK_GRAFT_NO_VEC_PERSIST", "1")
-    off = {
-        r.vec_id: (r.cluster, r.sim)
-        for r in similarity.kmeans(emb, k=4, iters=2).collect()
-    }
-    assert on == off
+    every Lloyd pass from it; the enclosing owned() scope must release
+    that persist on exit. The kmeans values are pinned by
+    test_kmeans_matches_numpy_lloyd and the similarity_kmeans oracle
+    row."""
+    from process_alphafold3_outputs_spark.session import owned
+
+    def persisted() -> set:
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
+
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    # an earlier unscoped persist of the same projection plan would be
+    # reused instead of persisted anew
+    spark.catalog.clearCache()
+    before = persisted()
+    with owned():
+        assert similarity.kmeans(emb, k=4, iters=2).count() == emb.count()
+        assert persisted() - before
+    assert persisted() - before == set()

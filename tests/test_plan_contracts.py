@@ -139,10 +139,11 @@ def test_multiprobe_lsh_broadcasts_queries_not_corpus(spark, sf_dir):
 
 
 def test_staged_clean_corpus_releases_storage(spark, sf_dir):
-    """The context-managed form must leave NO pinned blocks after exit
-    (VERDICT r2 minor: clean_corpus(stage=True) persisted two DataFrames
-    and never unpersisted)."""
-    from process_alphafold3_outputs_spark.plans.corpus import staged_clean_corpus
+    """clean_corpus(stage=True) inside an owned() scope must leave NO
+    pinned blocks after the scope exits (VERDICT r2 minor: the staged
+    DataFrames were persisted and never unpersisted)."""
+    from process_alphafold3_outputs_spark.plans.corpus import clean_corpus
+    from process_alphafold3_outputs_spark.session import owned
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     spark.catalog.clearCache()
@@ -150,7 +151,8 @@ def test_staged_clean_corpus_releases_storage(spark, sf_dir):
     # localCheckpoint()ed RDDs (connected components) whose pins survive
     # clearCache(); only pins created INSIDE the context must be gone.
     baseline = set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
-    with staged_clean_corpus(docs) as surv:
+    with owned():
+        surv = clean_corpus(docs, stage=True)
         assert surv.count() > 0  # materialise => the stages ARE persisted
         inside = set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
         assert inside - baseline

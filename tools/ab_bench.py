@@ -20,21 +20,13 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+import bench  # noqa: E402
+
 from process_alphafold3_outputs_spark.plans import driver_queries as dq
 from process_alphafold3_outputs_spark.plans import driver_queries_af3  # noqa: F401
 from process_alphafold3_outputs_spark.plans import driver_queries_ext  # noqa: F401
 from process_alphafold3_outputs_spark.plans import driver_queries_files  # noqa: F401
 from process_alphafold3_outputs_spark.session import get_spark
-
-
-def _release(spark) -> None:
-    jsc = spark.sparkContext._jsc.sc()
-    for rid in list(spark.sparkContext._jsc.getPersistentRDDs().keys()):
-        try:
-            jsc.unpersistRDD(rid, True)
-        except Exception:  # noqa: BLE001
-            pass
-    spark.catalog.clearCache()
 
 
 def main() -> None:
@@ -57,11 +49,13 @@ def main() -> None:
             fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
             elapsed = time.perf_counter() - t0
             os.environ.pop("SPARK_GRAFT_NO_SPREAD", None)
-            _release(spark)
+            spark.catalog.clearCache()
+            bench._release_persisted_rdds(spark)
             return round(elapsed, 3)
 
         one_run(False)  # shared warmup (shuffle dirs, codegen)
-        _release(spark)
+        spark.catalog.clearCache()
+        bench._release_persisted_rdds(spark)
         on, off = [], []
         for _ in range(args.runs):
             on.append(one_run(False))

@@ -22,6 +22,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+import bench  # noqa: E402
+
 from process_alphafold3_outputs_spark.plans import driver_queries as dq
 from process_alphafold3_outputs_spark.plans import driver_queries_af3  # noqa: F401
 from process_alphafold3_outputs_spark.plans import driver_queries_ext  # noqa: F401
@@ -31,16 +33,6 @@ from process_alphafold3_outputs_spark.session import get_spark
 
 def _noop(df) -> None:
     df.write.format("noop").mode("overwrite").save()
-
-
-def _release(spark) -> None:
-    jsc = spark.sparkContext._jsc.sc()
-    for rid in list(spark.sparkContext._jsc.getPersistentRDDs().keys()):
-        try:
-            jsc.unpersistRDD(rid, True)
-        except Exception:  # noqa: BLE001
-            pass
-    spark.catalog.clearCache()
 
 
 def main() -> None:
@@ -76,7 +68,8 @@ def main() -> None:
             t0 = time.monotonic()
             _noop(df_off)
             off.append(round(time.monotonic() - t0, 3))
-        _release(spark)
+        spark.catalog.clearCache()
+        bench._release_persisted_rdds(spark)
         print(
             json.dumps(
                 {

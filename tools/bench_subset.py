@@ -17,21 +17,13 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+import bench  # noqa: E402
+
 from process_alphafold3_outputs_spark.plans import driver_queries as dq
 from process_alphafold3_outputs_spark.plans import driver_queries_af3  # noqa: F401
 from process_alphafold3_outputs_spark.plans import driver_queries_ext  # noqa: F401
 from process_alphafold3_outputs_spark.plans import driver_queries_files  # noqa: F401
 from process_alphafold3_outputs_spark.session import get_spark
-
-
-def _release_persisted_rdds(spark) -> None:
-    jsc = spark.sparkContext._jsc.sc()
-    for rid in list(spark.sparkContext._jsc.getPersistentRDDs().keys()):
-        try:
-            jsc.unpersistRDD(rid, True)
-        except Exception:  # noqa: BLE001
-            pass
-    spark.catalog.clearCache()
 
 
 def main() -> None:
@@ -48,7 +40,7 @@ def main() -> None:
             fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
             elapsed = time.perf_counter() - t0
             spark.catalog.clearCache()
-            _release_persisted_rdds(spark)
+            bench._release_persisted_rdds(spark)
             return elapsed
 
         runs = [one_run() for _ in range(n_runs)]

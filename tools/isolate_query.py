@@ -32,6 +32,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 os.environ.setdefault("SPARK_GRAFT_UI", "true")
 
+import bench  # noqa: E402
+
 from process_alphafold3_outputs_spark.plans import driver_queries as dq
 from process_alphafold3_outputs_spark.plans import driver_queries_af3  # noqa: F401
 from process_alphafold3_outputs_spark.plans import driver_queries_ext  # noqa: F401
@@ -46,16 +48,6 @@ def _api(spark, path: str):
     return json.load(
         urllib.request.urlopen(f"{ui}/api/v1/applications/{app_id}/{path}", timeout=15)
     )
-
-
-def _release_persisted_rdds(spark) -> None:
-    jsc = spark.sparkContext._jsc.sc()
-    for rid in list(spark.sparkContext._jsc.getPersistentRDDs().keys()):
-        try:
-            jsc.unpersistRDD(rid, True)
-        except Exception:  # noqa: BLE001
-            pass
-    spark.catalog.clearCache()
 
 
 def probe(spark, name: str, fn, suffix: str, runs: int, plans_dir: str) -> dict:
@@ -83,7 +75,8 @@ def probe(spark, name: str, fn, suffix: str, runs: int, plans_dir: str) -> dict:
     )
 
     action()  # warmup
-    _release_persisted_rdds(spark)
+    spark.catalog.clearCache()
+    bench._release_persisted_rdds(spark)
 
     jobs_before = {j["jobId"] for j in _api(spark, "jobs")}
     stages_before = {s["stageId"] for s in _api(spark, "stages")}
@@ -119,7 +112,8 @@ def probe(spark, name: str, fn, suffix: str, runs: int, plans_dir: str) -> dict:
                 "shuffle_read_b": sum(s.get("shuffleReadBytes", 0) for s in stages),
                 "top_stages": top,
             }
-        _release_persisted_rdds(spark)
+        spark.catalog.clearCache()
+        bench._release_persisted_rdds(spark)
 
     out = {
         "query": name,
