@@ -24,6 +24,7 @@ import re
 import statistics
 import sys
 import time
+from collections import Counter
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -595,6 +596,16 @@ def _probed_wall(spark, action) -> dict:
     if shuffles is not None:
         out.update(shuffles)
     return out
+
+
+_PLAN_NODE = re.compile(r"^\(\d+\) (\w+)", re.M)
+
+
+def plan_node_counts(plan: str) -> Counter:
+    """Operator counts of an ``explain("formatted")`` capture. That
+    format prints every node twice, once in the tree and once as a
+    numbered ``(n) Name`` detail line; only the numbered lines count."""
+    return Counter(_PLAN_NODE.findall(plan))
 
 
 def _noop_write(df) -> None:

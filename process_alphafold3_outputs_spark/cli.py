@@ -25,24 +25,21 @@ import os
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from .operators.intervals import identify_interacting_residues
-from .operators.islands import find_islands
 from .operators.screen import screen_binders
-from .operators.spatial import contact_pairs_grid
 from .operators.structures import (
     pymol_scripts,
     write_interaction_cifs,
     write_overlay_models,
 )
-from .params import (
-    PARTNER_ISLAND_MAX_GAP,
-    PARTNER_ISLAND_MIN_LENGTH,
-    ScreenParams,
+from .params import ScreenParams
+from .plans.ingest import ingest_corpus, load_ingested, read_tree
+from .plans.pipeline import (
+    compute_contacts,
+    interaction_report,
+    partner_islands,
+    write_report,
 )
-from .plans.pipeline import interaction_report
 from .session import get_spark, keep, owned
-from .sources.af3_json import read_pae_long, read_summary_confidences
-from .sources.cif import chains_from_atoms, read_atoms
 
 
 def build_parser() -> argparse.ArgumentParser:
@@ -149,35 +146,23 @@ def _run(args: argparse.Namespace, spark: SparkSession) -> dict:
                 "stream_out": out_path}
 
     if args.ingest:
-        from .plans.ingest import ingest_corpus
-
         paths = ingest_corpus(spark, args.input_dir, args.ingest)
         return {"csv": None, "n_binders": None, "n_report_rows": None,
                 "interaction_cifs": 0, "overlay_files": 0, "tables": paths}
 
-    if args.from_tables:
-        from .plans.ingest import load_ingested
-
-        t = load_ingested(spark, args.from_tables)
-        preds, chains, pae, atoms = (
-            t["predictions"], t["chains"], t["pae_long"], t["atoms"]
-        )
-    else:
-        preds = read_summary_confidences(spark, args.input_dir)
-        atoms = read_atoms(spark, args.input_dir)
-        chains = chains_from_atoms(atoms)
-        pae = read_pae_long(spark, args.input_dir)
+    t = (load_ingested(spark, args.from_tables) if args.from_tables
+         else read_tree(spark, args.input_dir))
+    preds, chains, pae, atoms = (
+        t["predictions"], t["chains"], t["pae_long"], t["atoms"]
+    )
 
     # shared subplans computed ONCE, reused across report + sinks
     # (reference recomputed them per output path — inefficiencies I1/I2)
     binders = keep(screen_binders(preds, params))
-    interacting = identify_interacting_residues(pae, chains, params, jobs=binders)
-    contacts = keep(contact_pairs_grid(atoms, interacting, params))
+    contacts = keep(compute_contacts(binders, chains, pae, atoms, params))
 
     report = interaction_report(preds, chains, pae, atoms, params, contacts=contacts)
-    if getattr(args, "distributed_csv", False):
-        from .plans.pipeline import write_report
-
+    if args.distributed_csv:
         csv_path = write_report(report, out_root, params)
         n_rows = spark.read.option("header", True).csv(csv_path).count()
     else:
@@ -193,7 +178,7 @@ def _run(args: argparse.Namespace, spark: SparkSession) -> dict:
               "n_report_rows": n_rows, "interaction_cifs": 0,
               "overlay_files": 0, "pae_csvs": 0}
 
-    if getattr(args, "emit_pae_csv", True):
+    if args.emit_pae_csv:
         from .sources.af3_json import write_pae_matrix_csvs
 
         # Reference parity: _pae.csv is written only for jobs that pass
@@ -203,7 +188,7 @@ def _run(args: argparse.Namespace, spark: SparkSession) -> dict:
         pae_binders = pae.join(binders.select("job"), "job", "left_semi")
         result["pae_csvs"] = write_pae_matrix_csvs(pae_binders, out_root).count()
 
-    if getattr(args, "write_log", False) and not args.from_tables:
+    if args.write_log and not args.from_tables:
         from .sources.af3_json import read_summary_errors
 
         log_path = os.path.join(out_root, "process_af3_outputs.log")
@@ -213,18 +198,11 @@ def _run(args: argparse.Namespace, spark: SparkSession) -> dict:
         result["log"] = log_path
 
     if not args.skip_structures:
-        partner_islands = find_islands(
-            contacts.select("job", "partner_res").distinct(),
-            ["job"],
-            "partner_res",
-            PARTNER_ISLAND_MAX_GAP,
-            PARTNER_ISLAND_MIN_LENGTH,
-            island_col="p_isl",
-        ).select("job", "partner_res")
+        islands = partner_islands(contacts)
 
         int_dir = os.path.join(out_root, params.interaction_dir())
         written = write_interaction_cifs(
-            atoms, partner_islands, int_dir, params, jobs=binders
+            atoms, islands, int_dir, params, jobs=binders
         ).collect()
         result["interaction_cifs"] = len(written)
 
@@ -232,20 +210,19 @@ def _run(args: argparse.Namespace, spark: SparkSession) -> dict:
         # collect the sink result ONCE (the writer is a grouped-map UDF;
         # re-evaluating the plan would rewrite every file)
         overlay_rows = write_overlay_models(
-            atoms, partner_islands, ov_dir, params, jobs=binders
+            atoms, islands, ov_dir, params, jobs=binders
         ).collect()
         files = spark.createDataFrame(
             [
                 (os.path.basename(os.path.dirname(r.path)), r.path)
                 for r in overlay_rows
-            ]
-            or [("", "")],
+            ],
             "job string, path string",
-        ).filter(F.col("job") != "")
+        )
         scripts = pymol_scripts(files, ov_dir).collect()
         result["overlay_files"] = len(overlay_rows) + len(scripts)
 
-        if getattr(args, "rmsd", False):
+        if args.rmsd:
             from .operators.structures import superimpose_models
 
             rmsd_path = os.path.join(out_root, "overlay_rmsd.csv")

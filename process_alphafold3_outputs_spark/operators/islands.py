@@ -30,7 +30,6 @@ def find_islands(
     max_gap: int,
     min_length: int,
     island_col: str = "island_start",
-    keep_size: bool = False,
 ) -> DataFrame:
     """One row per kept (partition, value); ``island_col`` = min value of
     the island the row belongs to.
@@ -53,13 +52,12 @@ def find_islands(
         .drop("_brk")
     )
     w_isl = Window.partitionBy(*part, F.col("_isl"))
-    out = (
+    return (
         out.withColumn(island_col, F.min(value_col).over(w_isl))
         .withColumn("_sz", F.count(F.lit(1)).over(w_isl))
         .filter(F.col("_sz") >= min_length)
+        .drop("_sz", "_isl")
     )
-    out = out if not keep_size else out.withColumnRenamed("_sz", "island_size")
-    return out.drop("_sz", "_isl", *([] if keep_size else []))
 
 
 def island_ranges(

@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 from ..params import ScreenParams
 from .driver_queries import register
 from .driver_queries_af3 import _ISLANDS, REPORT_SELECT, base_cte
+from .ingest import read_tree
 
 _REPO_ROOT = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 FILE_CORPUS_DIR = os.path.join(_REPO_ROOT, ".cache", "af3_file_corpus")
@@ -62,18 +63,6 @@ _FILE_BASE = base_cte(
 )
 
 
-def _tree_preds(spark: SparkSession) -> DataFrame:
-    from ..sources.af3_json import read_summary_confidences
-
-    return read_summary_confidences(spark, TREE_DIR)
-
-
-def _tree_atoms(spark: SparkSession) -> DataFrame:
-    from ..sources.cif import read_atoms
-
-    return read_atoms(spark, TREE_DIR)
-
-
 # ---------------------------------------------------------------------------
 # O1/O2/O3/O4 — recursive scan, filename predicate, AppleDouble skip,
 # JSON parse with encoding fallback and malformed⇒drop
@@ -93,7 +82,9 @@ def file_read_summaries(spark: SparkSession, sf_dir: str) -> DataFrame:
     (recovered via the Python fallback), the AppleDouble ``._*`` file
     never read, and every well-formed job parsed with nulls where the
     JSON omits keys (coalesced to -1 for hash stability)."""
-    p = _tree_preds(spark)
+    from ..sources.af3_json import read_summary_confidences
+
+    p = read_summary_confidences(spark, TREE_DIR)
     return p.select(
         "job",
         F.round(F.coalesce(F.col("iptm"), F.lit(-1.0)), 6).alias("iptm"),
@@ -146,7 +137,9 @@ def file_read_pae_long(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def file_read_atoms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    a = _tree_atoms(spark)
+    from ..sources.cif import read_atoms
+
+    a = read_atoms(spark, TREE_DIR)
     return a.select(
         "job",
         "model_id",
@@ -174,9 +167,9 @@ def file_read_atoms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def file_chains_from_cifs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..sources.cif import chains_from_atoms
+    from ..sources.cif import chains_from_atoms, read_atoms
 
-    ch = chains_from_atoms(_tree_atoms(spark))
+    ch = chains_from_atoms(read_atoms(spark, TREE_DIR))
     return ch.select(
         "job", "chain_id", "chain_index", "token_length", "sequence"
     )
@@ -201,19 +194,6 @@ def file_summary_errors(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # O29 (+O34) — parameterised CSV report sink, written then RE-READ
 # ---------------------------------------------------------------------------
-def _tree_pipeline_tables(spark: SparkSession) -> dict[str, DataFrame]:
-    from ..sources.af3_json import read_pae_long
-    from ..sources.cif import chains_from_atoms
-
-    atoms = _tree_atoms(spark)
-    return {
-        "predictions": _tree_preds(spark),
-        "chains": chains_from_atoms(atoms),
-        "pae_long": read_pae_long(spark, TREE_DIR),
-        "atoms": atoms,
-    }
-
-
 @register(
     "file_sink_report_csv",
     sql=f"""
@@ -229,7 +209,7 @@ def file_sink_report_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
     file fails the hash."""
     from .pipeline import interaction_report, write_report
 
-    t = _tree_pipeline_tables(spark)
+    t = read_tree(spark, TREE_DIR)
     report = interaction_report(
         t["predictions"], t["chains"], t["pae_long"], t["atoms"], PARAMS
     )
@@ -240,21 +220,16 @@ def file_sink_report_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # O30 — predicate-filtered CIF sink ({job}_interaction.cif), re-read
 # ---------------------------------------------------------------------------
-def _partner_islands(spark: SparkSession, t: dict[str, DataFrame]) -> DataFrame:
-    from ..operators.islands import find_islands
-    from .pipeline import compute_contacts
+def _sink_inputs(spark: SparkSession) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """(atoms, binders, partner islands) of the tree, the inputs of the
+    structure sinks."""
+    from ..operators.screen import screen_binders
+    from .pipeline import compute_contacts, partner_islands
 
-    contacts = compute_contacts(
-        t["predictions"], t["chains"], t["pae_long"], t["atoms"], PARAMS
-    )
-    return find_islands(
-        contacts.select("job", "partner_res").distinct(),
-        ["job"],
-        "partner_res",
-        1,
-        3,
-        island_col="p_isl",
-    ).select("job", "partner_res")
+    t = read_tree(spark, TREE_DIR)
+    binders = screen_binders(t["predictions"], PARAMS)
+    contacts = compute_contacts(binders, t["chains"], t["pae_long"], t["atoms"], PARAMS)
+    return t["atoms"], binders, partner_islands(contacts)
 
 
 @register(
@@ -278,15 +253,12 @@ def file_sink_interaction_cifs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Write the trimmed per-binder CIFs (:320-345, :382), then parse
     the WRITTEN files back: retained residues must be exactly chain A ∪
     island-member chain-B residues for every screened binder."""
-    from ..operators.screen import screen_binders
     from ..operators.structures import write_interaction_cifs
     from ..sources.cif import read_atoms
 
-    t = _tree_pipeline_tables(spark)
-    islands = _partner_islands(spark, t)
+    atoms, binders, islands = _sink_inputs(spark)
     out = os.path.join(OUT_DIR, PARAMS.interaction_dir())
-    binders = screen_binders(t["predictions"], PARAMS)
-    write_interaction_cifs(t["atoms"], islands, out, PARAMS, jobs=binders).collect()
+    write_interaction_cifs(atoms, islands, out, PARAMS, jobs=binders).collect()
     back = read_atoms(
         spark, out, glob="*_interaction.cif",
         job_from_filename=r"^(.*)_interaction\.cif$",
@@ -325,15 +297,12 @@ def file_sink_overlay_models(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Model-0 islands fan out to EVERY model of the job (:468-469);
     chains relabelled POI→A / partner→B (identity for default params,
     pinned by the reversed-direction pytest)."""
-    from ..operators.screen import screen_binders
     from ..operators.structures import write_overlay_models
     from ..sources.cif import read_atoms
 
-    t = _tree_pipeline_tables(spark)
-    islands = _partner_islands(spark, t)
+    atoms, binders, islands = _sink_inputs(spark)
     out = os.path.join(OUT_DIR, PARAMS.overlay_dir())
-    binders = screen_binders(t["predictions"], PARAMS)
-    write_overlay_models(t["atoms"], islands, out, PARAMS, jobs=binders).collect()
+    write_overlay_models(atoms, islands, out, PARAMS, jobs=binders).collect()
     back = read_atoms(spark, out, glob="model_*.cif")
     return back.select(
         "job",
@@ -382,15 +351,11 @@ def file_sink_pymol_scripts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Codegen parity (:477-541): load per model in order, align each
     model_k>0 onto model_0 chain A, colour, save {job}_overlay.pse.
     Paths are reduced to basenames so the hash is location-independent."""
-    from ..operators.screen import screen_binders
     from ..operators.structures import pymol_scripts, write_overlay_models
-    from ..sources.cif import read_atoms  # noqa: F401  (same tree reader family)
 
-    t = _tree_pipeline_tables(spark)
-    islands = _partner_islands(spark, t)
+    atoms, binders, islands = _sink_inputs(spark)
     out = os.path.join(OUT_DIR, PARAMS.overlay_dir())
-    binders = screen_binders(t["predictions"], PARAMS)
-    written = write_overlay_models(t["atoms"], islands, out, PARAMS, jobs=binders)
+    written = write_overlay_models(atoms, islands, out, PARAMS, jobs=binders)
     files = written.select(
         F.regexp_extract("path", r".*/([^/]+)/[^/]+$", 1).alias("job"), "path"
     )

@@ -13,9 +13,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
-from ..params import ScreenParams
 from ..sources.af3_json import read_pae_long, read_summary_confidences
 from ..sources.cif import chains_from_atoms, read_atoms
 from ..sources.layout import write_job_bucketed
@@ -29,15 +28,8 @@ def ingest_corpus(
     spark: SparkSession, input_dir: str, table_root: str, n_buckets: int = 64
 ) -> dict[str, str]:
     """Parse the file tree once; write the four engine tables."""
-    atoms = read_atoms(spark, input_dir)
-    dfs = {
-        "predictions": read_summary_confidences(spark, input_dir),
-        "chains": chains_from_atoms(atoms),
-        "pae_long": read_pae_long(spark, input_dir),
-        "atoms": atoms,
-    }
     paths = {}
-    for name, df in dfs.items():
+    for name, df in read_tree(spark, input_dir).items():
         path = os.path.join(table_root, name)
         if name in _BUCKETED:
             write_job_bucketed(df, path, n_buckets=min(n_buckets, _BUCKETED[name]))
@@ -47,20 +39,20 @@ def ingest_corpus(
     return paths
 
 
-def load_ingested(spark: SparkSession, table_root: str) -> dict:
+def read_tree(spark: SparkSession, input_dir: str) -> dict[str, DataFrame]:
+    """The four engine tables (``TABLES``) parsed straight from an AF3
+    file tree; the same dict ``load_ingested`` returns from tables."""
+    atoms = read_atoms(spark, input_dir)
+    return {
+        "predictions": read_summary_confidences(spark, input_dir),
+        "chains": chains_from_atoms(atoms),
+        "pae_long": read_pae_long(spark, input_dir),
+        "atoms": atoms,
+    }
+
+
+def load_ingested(spark: SparkSession, table_root: str) -> dict[str, DataFrame]:
     return {
         name: spark.read.parquet(os.path.join(table_root, name))
         for name in TABLES
     }
-
-
-def report_from_tables(
-    spark: SparkSession, table_root: str, params: ScreenParams
-):
-    """The flagship straight off the ingested tables — no file parsing."""
-    from .pipeline import interaction_report
-
-    t = load_ingested(spark, table_root)
-    return interaction_report(
-        t["predictions"], t["chains"], t["pae_long"], t["atoms"], params
-    )

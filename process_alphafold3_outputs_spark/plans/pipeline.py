@@ -4,8 +4,14 @@ re-expressed as ONE DataFrame DAG over all jobs at once
 
 The per-job Python loop disappears into partitioning: every stage keys
 by ``job`` first, so the whole corpus processes as embarrassingly
-parallel partitions with exactly three shuffles (PAE threshold agg,
-island windows, contact grid join).
+parallel partitions. Over the 20-job test corpus the report's physical
+plan has 22 shuffle and 19 broadcast exchanges over 23 scans
+(``bench.plan_node_counts``; capped in ``tests/test_plan_contracts.py``).
+
+This module and ``plans/ingest.py`` are the only places that compose the
+screen: callers read the tables with ``ingest.read_tree`` or
+``ingest.load_ingested`` and build on ``compute_contacts``,
+``partner_islands`` and ``interaction_report``.
 """
 
 from __future__ import annotations
@@ -26,6 +32,21 @@ from ..params import (
 )
 
 
+def partner_islands(contacts: DataFrame) -> DataFrame:
+    """Level 1 of O24 (process_af3_outputs.py:288-293): partner residues
+    with >= 1 contact, kept when they fall in an island (gap<=1, len>=3).
+    Returns (job, partner_res, p_isl); the structure sinks select
+    (job, partner_res)."""
+    return find_islands(
+        contacts.select("job", "partner_res").distinct(),
+        ["job"],
+        "partner_res",
+        PARTNER_ISLAND_MAX_GAP,
+        PARTNER_ISLAND_MIN_LENGTH,
+        island_col="p_isl",
+    )
+
+
 def two_level_islands(contacts: DataFrame) -> DataFrame:
     """O24 (process_af3_outputs.py:288-302): islands over contact-map keys
     (partner residues with >= 1 contact; gap<=1, len>=3), then — per
@@ -39,21 +60,13 @@ def two_level_islands(contacts: DataFrame) -> DataFrame:
     (SURVEY §7.2). The reference iterates a raw ``set`` here; we sort
     (documented divergence-to-correctness, SURVEY §2.2 #7).
     """
-    cmap_keys = contacts.select("job", "partner_res").distinct()
-    partner_islands = find_islands(
-        cmap_keys,
-        ["job"],
-        "partner_res",
-        PARTNER_ISLAND_MAX_GAP,
-        PARTNER_ISLAND_MIN_LENGTH,
-        island_col="p_isl",
-    )
-    p_ranges = partner_islands.groupBy("job", "p_isl").agg(
+    p_islands = partner_islands(contacts)
+    p_ranges = p_islands.groupBy("job", "p_isl").agg(
         F.min("partner_res").alias("p_min"), F.max("partner_res").alias("p_max")
     )
     # Per-island set union of contact sets (:294-297) in long form.
     poi_union = (
-        contacts.join(partner_islands, ["job", "partner_res"])
+        contacts.join(p_islands, ["job", "partner_res"])
         .select("job", "p_isl", "poi_res")
         .distinct()
     )
@@ -75,17 +88,16 @@ def two_level_islands(contacts: DataFrame) -> DataFrame:
 
 
 def compute_contacts(
-    predictions: DataFrame,
+    binders: DataFrame,
     chains: DataFrame,
     pae_long: DataFrame,
     atoms: DataFrame,
     params: ScreenParams,
 ) -> DataFrame:
-    """Shared subplan: screen → PAE threshold → contact pairs. Callers
-    that need both the report AND the structure sinks compute (and
-    cache) this ONCE — the reference recomputed the whole chain per
-    output path (inefficiencies I1/I2)."""
-    binders = screen_binders(predictions, params)
+    """Shared subplan: screened ``binders`` → PAE threshold → contact
+    pairs. Callers that need both the report AND the structure sinks
+    compute (and cache) this ONCE — the reference recomputed the whole
+    chain per output path (inefficiencies I1/I2)."""
     interacting = identify_interacting_residues(pae_long, chains, params, jobs=binders)
     return contact_pairs_grid(atoms, interacting, params)
 
@@ -106,7 +118,8 @@ def interaction_report(
     ``contacts``: optionally a precomputed (cached) compute_contacts
     result, reused across report + sinks."""
     if contacts is None:
-        contacts = compute_contacts(predictions, chains, pae_long, atoms, params)
+        binders = screen_binders(predictions, params)
+        contacts = compute_contacts(binders, chains, pae_long, atoms, params)
     pairs = two_level_islands(contacts)
 
     poi_seq = chains.filter(F.col("chain_id") == params.poi_chain).select(

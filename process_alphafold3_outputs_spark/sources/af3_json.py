@@ -53,44 +53,50 @@ def _with_job(df: DataFrame) -> DataFrame:
     )
 
 
-#: hard cap on the driver-side corrupt-path collect (robust fallback).
+def _read_json_tree(
+    spark: SparkSession, input_dir: str, schema: T.StructType, glob: str
+) -> DataFrame:
+    """Every ``glob`` file under ``input_dir``, one multi-line JSON
+    document per row; unparseable files keep only ``_corrupt_record``."""
+    return (
+        spark.read.schema(schema)
+        .option("multiLine", "true")
+        .option("mode", "PERMISSIVE")
+        .option("columnNameOfCorruptRecord", "_corrupt_record")
+        .option("recursiveFileLookup", "true")
+        .option("pathGlobFilter", glob)
+        .json(input_dir)
+    )
+
+
+#: hard cap on the driver-side corrupt-path collect (encoding fallback).
 #: Corrupt files are rare by construction; if a pathological corpus
 #: exceeds this, the excess files simply stay dropped (the per-row
 #: contract) instead of ballooning driver memory.
 MAX_FALLBACK_FILES = 10_000
 
 
-def read_summary_confidences(
-    spark: SparkSession, input_dir: str, robust: bool = True
-) -> DataFrame:
+def read_summary_confidences(spark: SparkSession, input_dir: str) -> DataFrame:
     """``predictions`` table from ``*_summary_confidences_0.json`` files.
 
     Corrupt/undecodable JSON drops the row (reference returns False,
     :70-80) rather than failing the query (SURVEY §2.2 #11).
 
-    ``robust=True`` adds the reference's encoding-fallback semantics
-    (:67-80 utf-8 → latin-1): files the JVM utf-8 parse rejected are
-    re-read ONCE via binaryFile + Python json with the fallback chain.
-    Corrupt files are rare by construction, so the fallback scan is a
-    handful of files — the driver-side path collect is bounded and does
-    not touch the happy path.
+    The reference's encoding fallback (:67-80 utf-8 → latin-1) applies:
+    files the JVM utf-8 parse rejected are re-read ONCE via binaryFile +
+    Python json with the fallback chain. Corrupt files are rare by
+    construction, so the fallback scan is a handful of files — the
+    driver-side path collect is bounded and does not touch the happy
+    path.
     """
-    df = (
-        spark.read.schema(SUMMARY_SCHEMA)
-        .option("multiLine", "true")
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", "_corrupt_record")
-        .option("recursiveFileLookup", "true")
-        .option("pathGlobFilter", "*_summary_confidences_0.json")
-        .json(input_dir)
+    # Spark refuses _corrupt_record-only queries on an uncached JSON
+    # scan; summary docs are ~100 B/job, so caching the screen input is
+    # cheap even at full-corpus scale.
+    df = keep(
+        _read_json_tree(spark, input_dir, SUMMARY_SCHEMA, "*_summary_confidences_0.json")
         .withColumn("_path", F.input_file_name())
         .filter(~F.col("_path").rlike(r"/\._"))  # AppleDouble junk (O2/O3)
     )
-    if robust:
-        # Spark refuses _corrupt_record-only queries on an uncached JSON
-        # scan; summary docs are ~100 B/job, so caching the screen input
-        # is cheap even at full-corpus scale.
-        df = keep(df)
     # job from the captured _path column — input_file_name() evaluates
     # empty once rows come from cache instead of the file scan.
     ok = (
@@ -98,8 +104,6 @@ def read_summary_confidences(
         .withColumn("job", F.regexp_extract(F.col("_path"), _JOB_FROM_PATH, 1))
         .select("job", "iptm", "ptm", "chain_pair_pae_min")
     )
-    if not robust:
-        return ok
     bad_paths = [
         r["_path"]
         for r in df.filter(F.col("_corrupt_record").isNotNull())
@@ -186,15 +190,7 @@ def read_pae_long(spark: SparkSession, input_dir: str) -> DataFrame:
     The reference requires BOTH 'pae' and 'token_res_ids' keys
     (extract_pae_data, :111-113) — rows missing either are dropped.
     """
-    df = (
-        spark.read.schema(FULL_DATA_SCHEMA)
-        .option("multiLine", "true")
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", "_corrupt_record")
-        .option("recursiveFileLookup", "true")
-        .option("pathGlobFilter", "*_full_data_0.json")
-        .json(input_dir)
-    )
+    df = _read_json_tree(spark, input_dir, FULL_DATA_SCHEMA, "*_full_data_0.json")
     docs = (
         _with_job(df)
         .filter(~F.input_file_name().rlike(r"/\._"))
@@ -261,13 +257,7 @@ def read_summary_errors(spark: SparkSession, input_dir: str) -> DataFrame:
     cannot grep a driver log; the errors ARE a queryable side output
     (SURVEY §2 O35: 'per-row error tracking as an errors DataFrame')."""
     df = keep(
-        spark.read.schema(SUMMARY_SCHEMA)
-        .option("multiLine", "true")
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", "_corrupt_record")
-        .option("recursiveFileLookup", "true")
-        .option("pathGlobFilter", "*_summary_confidences_0.json")
-        .json(input_dir)
+        _read_json_tree(spark, input_dir, SUMMARY_SCHEMA, "*_summary_confidences_0.json")
         .withColumn("_path", F.input_file_name())
         .filter(~F.col("_path").rlike(r"/\._"))
     )

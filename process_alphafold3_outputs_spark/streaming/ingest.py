@@ -56,6 +56,9 @@ from ..operators.screen import screen_binders
 from ..params import ScreenParams
 from ..sources.af3_json import SUMMARY_SCHEMA, _JOB_FROM_PATH
 
+#: files a watcher's source admits per micro-batch
+MAX_FILES_PER_TRIGGER = 1000
+
 
 def watch_summaries(
     spark: SparkSession,
@@ -63,7 +66,6 @@ def watch_summaries(
     out_path: str,
     checkpoint_dir: str,
     params: ScreenParams,
-    max_files_per_trigger: int = 1000,
 ):
     """Start the watch-folder screen. Returns the StreamingQuery.
 
@@ -78,7 +80,7 @@ def watch_summaries(
         .option("columnNameOfCorruptRecord", "_corrupt_record")
         .option("pathGlobFilter", "*_summary_confidences_0.json")
         .option("recursiveFileLookup", "true")
-        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .option("maxFilesPerTrigger", MAX_FILES_PER_TRIGGER)
         .json(inbox_dir)
         .withColumn("job", F.regexp_extract(F.input_file_name(), _JOB_FROM_PATH, 1))
         .filter(~F.input_file_name().rlike(r"/\._"))
@@ -164,7 +166,6 @@ def watch_documents(
     out_path: str,
     checkpoint_dir: str,
     min_required_hits: int = 2,
-    max_files_per_trigger: int = 1000,
 ):
     """Streaming corpus intake: parquet drops under ``inbox_dir`` flow
     through the SAME batch Gopher quality kernel per micro-batch
@@ -181,7 +182,7 @@ def watch_documents(
         spark.readStream.schema(
             "doc_id long, text string, lang string, source string, n_chars long"
         )
-        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .option("maxFilesPerTrigger", MAX_FILES_PER_TRIGGER)
         .parquet(inbox_dir)
     )
 
@@ -413,7 +414,6 @@ def watch_documents_dedup(
     out_path: str,
     hashes_path: str,
     checkpoint_dir: str,
-    max_files_per_trigger: int = 1000,
 ):
     """Streaming corpus intake WITH cross-epoch exact dedup: each
     micro-batch of document drops runs the batch
@@ -437,7 +437,7 @@ def watch_documents_dedup(
         spark.readStream.schema(
             "doc_id long, text string, lang string, source string, n_chars long"
         )
-        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .option("maxFilesPerTrigger", MAX_FILES_PER_TRIGGER)
         .parquet(inbox_dir)
     )
 
@@ -464,7 +464,6 @@ def watch_documents_scored(
     out_path: str,
     checkpoint_dir: str,
     alpha: float = 0.5,
-    max_files_per_trigger: int = 1000,
 ):
     """Streaming fluency scoring: score each micro-batch of incoming
     documents against a BATCH-TRAINED bigram model
@@ -486,7 +485,7 @@ def watch_documents_scored(
         spark.readStream.schema(
             "doc_id long, text string, lang string, source string, n_chars long"
         )
-        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .option("maxFilesPerTrigger", MAX_FILES_PER_TRIGGER)
         .parquet(inbox_dir)
     )
 
@@ -510,7 +509,6 @@ def watch_media_dedup(
     checkpoint_dir: str,
     max_hamming: int = 3,
     fake: bool = False,
-    max_files_per_trigger: int = 1000,
 ):
     """Streaming image intake with cross-epoch PERCEPTUAL dedup: each
     micro-batch of media drops runs the batch
@@ -529,7 +527,7 @@ def watch_media_dedup(
             "asset_id long, modality string, content binary, "
             "meta struct<width:int, height:int, duration_ms:int, codec:string>"
         )
-        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .option("maxFilesPerTrigger", MAX_FILES_PER_TRIGGER)
         .parquet(inbox_dir)
     )
 
@@ -560,7 +558,6 @@ def watch_documents_near_dedup(
     out_path: str,
     bands_path: str,
     checkpoint_dir: str,
-    max_files_per_trigger: int = 1000,
 ):
     """Streaming corpus intake with cross-epoch NEAR-dedup: each
     micro-batch runs the batch ``incremental_near_dedup`` kernel
@@ -576,7 +573,7 @@ def watch_documents_near_dedup(
         spark.readStream.schema(
             "doc_id long, text string, lang string, source string, n_chars long"
         )
-        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .option("maxFilesPerTrigger", MAX_FILES_PER_TRIGGER)
         .parquet(inbox_dir)
     )
 
@@ -607,7 +604,6 @@ def watch_audio_dedup(
     checkpoint_dir: str,
     max_hamming: int = 3,
     fake: bool = False,
-    max_files_per_trigger: int = 1000,
 ):
     """Streaming audio intake with cross-epoch SPECTRAL dedup — the
     audio member of the intake family (exact / LSH-near / perceptual
@@ -623,7 +619,7 @@ def watch_audio_dedup(
             "asset_id long, modality string, content binary, "
             "meta struct<width:int, height:int, duration_ms:int, codec:string>"
         )
-        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .option("maxFilesPerTrigger", MAX_FILES_PER_TRIGGER)
         .parquet(inbox_dir)
     )
 
@@ -655,7 +651,6 @@ def watch_embeddings_ann(
     centroids_path: str,
     checkpoint_dir: str,
     n_cells: int = 16,
-    max_files_per_trigger: int = 1000,
 ):
     """Streaming IVF index maintenance — the ANN twin of the dedup
     watchers: each micro-batch of embedding drops is assigned to its
@@ -677,7 +672,7 @@ def watch_embeddings_ann(
 
     stream = (
         spark.readStream.schema("vec_id long, embedding array<float>")
-        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .option("maxFilesPerTrigger", MAX_FILES_PER_TRIGGER)
         .parquet(inbox_dir)
     )
 
@@ -711,7 +706,6 @@ def watch_documents_substrings(
     grams_path: str,
     checkpoint_dir: str,
     min_words: int = 20,
-    max_files_per_trigger: int = 1000,
 ):
     """Streaming span-level exact-substring dedup (Lee et al. 2022 in
     intake form): each micro-batch of document drops runs the batch
@@ -725,7 +719,7 @@ def watch_documents_substrings(
         spark.readStream.schema(
             "doc_id long, text string, lang string, source string, n_chars long"
         )
-        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .option("maxFilesPerTrigger", MAX_FILES_PER_TRIGGER)
         .parquet(inbox_dir)
     )
 
@@ -792,7 +786,6 @@ def watch_embeddings_ivfpq(
     m: int = 8,
     kc: int = 16,
     dim: int | None = None,
-    max_files_per_trigger: int = 1000,
 ):
     """Streaming IVF-PQ (IVFADC) index maintenance — the compressed
     twin of :func:`watch_embeddings_ann`: the full model (coarse
@@ -810,7 +803,7 @@ def watch_embeddings_ivfpq(
 
     stream = (
         spark.readStream.schema("vec_id long, embedding array<float>")
-        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .option("maxFilesPerTrigger", MAX_FILES_PER_TRIGGER)
         .parquet(inbox_dir)
     )
 
@@ -854,7 +847,6 @@ def watch_entities(
     id_col: str = "id",
     name_col: str = "name",
     max_distance: int = 2,
-    max_files_per_trigger: int = 1000,
 ):
     """Streaming entity resolution: each micro-batch of (id, name)
     drops runs the batch ``incremental_resolve`` kernel against the
@@ -868,7 +860,7 @@ def watch_entities(
 
     stream = (
         spark.readStream.schema(f"{id_col} long, {name_col} string")
-        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .option("maxFilesPerTrigger", MAX_FILES_PER_TRIGGER)
         .parquet(inbox_dir)
     )
 
@@ -901,7 +893,6 @@ def watch_documents_dsir(
     out_path: str,
     checkpoint_dir: str,
     m_buckets: int = 256,
-    max_files_per_trigger: int = 1000,
 ):
     """Streaming DSIR scoring: importance-weight each micro-batch of
     incoming documents against a BATCH-TRAINED bucket log-ratio table
@@ -919,7 +910,7 @@ def watch_documents_dsir(
         spark.readStream.schema(
             "doc_id long, text string, lang string, source string, n_chars long"
         )
-        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .option("maxFilesPerTrigger", MAX_FILES_PER_TRIGGER)
         .parquet(inbox_dir)
     )
 
@@ -945,7 +936,6 @@ def watch_documents_classifier(
     checkpoint_dir: str,
     threshold: float = 0.5,
     seed: str = "qclf-v1",
-    max_files_per_trigger: int = 1000,
 ):
     """Streaming quality gating with a TRAINED classifier: score each
     micro-batch against the frozen logistic model at ``model_path``
@@ -967,7 +957,7 @@ def watch_documents_classifier(
         spark.readStream.schema(
             "doc_id long, text string, lang string, source string, n_chars long"
         )
-        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .option("maxFilesPerTrigger", MAX_FILES_PER_TRIGGER)
         .parquet(inbox_dir)
     )
 
@@ -1002,7 +992,6 @@ def watch_queries_hybrid(
     k: int = 10,
     k_each: int = 20,
     c: int = 60,
-    max_files_per_trigger: int = 1000,
 ):
     """Streaming hybrid-search SERVING: queries arrive as (query_id,
     term) parquet drops; each micro-batch runs the batched RRF fusion
@@ -1021,7 +1010,7 @@ def watch_queries_hybrid(
 
     stream = (
         spark.readStream.schema("query_id long, term string")
-        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .option("maxFilesPerTrigger", MAX_FILES_PER_TRIGGER)
         .parquet(inbox_dir)
     )
 
@@ -1051,7 +1040,6 @@ def watch_documents_doremi(
     iters: int = 4,
     eta: float = 1.0,
     smoothing: float = 0.01,
-    max_files_per_trigger: int = 1000,
 ):
     """Streaming DoReMi: the domain-mixture weight table, kept CURRENT
     over a continuously-ingested corpus. The whole loss computation
@@ -1075,7 +1063,7 @@ def watch_documents_doremi(
         spark.readStream.schema(
             "doc_id long, text string, lang string, source string, n_chars long"
         )
-        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .option("maxFilesPerTrigger", MAX_FILES_PER_TRIGGER)
         .parquet(inbox_dir)
     )
 
@@ -1137,7 +1125,6 @@ def watch_table_privacy(
     schema: str,
     quasi_cols: list[str],
     k: int = 5,
-    max_files_per_trigger: int = 1000,
 ):
     """Streaming privacy release gate: every micro-batch of table drops
     merges its quasi-identifier group counts into the rolling
@@ -1153,7 +1140,7 @@ def watch_table_privacy(
     StreamingQuery."""
     stream = (
         spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .option("maxFilesPerTrigger", MAX_FILES_PER_TRIGGER)
         .parquet(inbox_dir)
     )
 
@@ -1214,7 +1201,6 @@ def watch_table_cdc(
     keys: list[str],
     seq_col: str = "seq",
     op_col: str = "op",
-    max_files_per_trigger: int = 1000,
 ):
     """Streaming CDC materialization (the 19th watcher): every
     micro-batch of change rows (table columns + ``seq`` + ``op`` in
@@ -1235,7 +1221,7 @@ def watch_table_cdc(
     op). Returns the StreamingQuery."""
     stream = (
         spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .option("maxFilesPerTrigger", MAX_FILES_PER_TRIGGER)
         .parquet(inbox_dir)
     )
 
@@ -1262,7 +1248,6 @@ def watch_table_drift(
     col: str,
     ref_path: str,
     n_bins: int = 10,
-    max_files_per_trigger: int = 1000,
 ):
     """Streaming drift gate (the 20th watcher): the reference snapshot
     at ``ref_path`` freezes the PSI bins ONCE (epoch 0 persists bin
@@ -1277,7 +1262,7 @@ def watch_table_drift(
     Returns the StreamingQuery."""
     stream = (
         spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .option("maxFilesPerTrigger", MAX_FILES_PER_TRIGGER)
         .parquet(inbox_dir)
     )
 
@@ -1303,7 +1288,6 @@ def watch_table_profile(
     schema: str,
     cols: list[str],
     m: int = 256,
-    max_files_per_trigger: int = 1000,
 ):
     """Streaming table profile (the 21st watcher): every micro-batch
     folds its per-column row/null counts and deterministic-md5 HLL
@@ -1328,7 +1312,7 @@ def watch_table_profile(
     fails loudly (the drift watcher's lineage-guard discipline)."""
     stream = (
         spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .option("maxFilesPerTrigger", MAX_FILES_PER_TRIGGER)
         .parquet(inbox_dir)
     )
 
@@ -1606,7 +1590,6 @@ def watch_documents_langs(
     checkpoint_dir: str,
     para_words: int = 12,
     split: bool = True,
-    max_files_per_trigger: int = 1000,
 ):
     """Streaming language routing: each micro-batch of documents is
     language-segmented (``split=True`` — the
@@ -1628,7 +1611,7 @@ def watch_documents_langs(
         spark.readStream.schema(
             "doc_id long, text string, lang string, source string, n_chars long"
         )
-        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .option("maxFilesPerTrigger", MAX_FILES_PER_TRIGGER)
         .parquet(inbox_dir)
     )
 
@@ -1658,7 +1641,6 @@ def watch_documents_expect(
     out_path: str,
     checkpoint_dir: str,
     rules: list[dict] | None = None,
-    max_files_per_trigger: int = 1000,
 ):
     """Continuous data-quality monitoring: every micro-batch of
     document drops is validated against the declarative constraint set
@@ -1685,7 +1667,7 @@ def watch_documents_expect(
         spark.readStream.schema(
             "doc_id long, text string, lang string, source string, n_chars long"
         )
-        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .option("maxFilesPerTrigger", MAX_FILES_PER_TRIGGER)
         .parquet(inbox_dir)
     )
 
@@ -1744,7 +1726,6 @@ def watch_events_ohlc(
     value_col: str,
     width: int,
     seq_col: str,
-    max_files_per_trigger: int = 1000,
 ):
     """Streaming OHLC bars (the 22nd watcher): every micro-batch of
     (key, ts, value) events collapses to mergeable per-bucket
@@ -1762,7 +1743,7 @@ def watch_events_ohlc(
     Returns the StreamingQuery."""
     stream = (
         spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .option("maxFilesPerTrigger", MAX_FILES_PER_TRIGGER)
         .parquet(inbox_dir)
     )
 
@@ -1848,7 +1829,6 @@ def watch_events_rate(
     value_col: str,
     seq_col: str,
     counter: bool = False,
-    max_files_per_trigger: int = 1000,
 ):
     """Streaming rate-of-change (the 23rd watcher): each micro-batch
     of (key, ts, value) observations is rated with the batch
@@ -1871,7 +1851,7 @@ def watch_events_rate(
     the previous row does not.)"""
     stream = (
         spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .option("maxFilesPerTrigger", MAX_FILES_PER_TRIGGER)
         .parquet(inbox_dir)
     )
 
@@ -1898,7 +1878,6 @@ def watch_top_values(
     cols: list[str],
     k: int = 5,
     max_values: int = 10_000,
-    max_files_per_trigger: int = 1000,
 ):
     """Streaming heavy hitters (the 24th watcher): every micro-batch
     folds its per-(column, value) counts into the versioned state and
@@ -1921,7 +1900,7 @@ def watch_top_values(
     discipline) — restarting with different columns fails loudly."""
     stream = (
         spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .option("maxFilesPerTrigger", MAX_FILES_PER_TRIGGER)
         .parquet(inbox_dir)
     )
 
@@ -2043,7 +2022,6 @@ def watch_events_trend(
     ts_col: str,
     width: int,
     max_buckets: int = 100_000,
-    max_files_per_trigger: int = 1000,
 ):
     """Streaming volume trend (the 25th watcher): every micro-batch
     folds its per-(key, bucket) event counts into the versioned state
@@ -2073,7 +2051,7 @@ def watch_events_trend(
         raise ValueError("keys must be non-empty")
     stream = (
         spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .option("maxFilesPerTrigger", MAX_FILES_PER_TRIGGER)
         .parquet(inbox_dir)
     )
 
@@ -2156,7 +2134,6 @@ def watch_freshness(
     ts_col: str,
     as_of: int | None = None,
     max_keys: int = 1_000_000,
-    max_files_per_trigger: int = 1000,
 ):
     """Streaming freshness watermark (the 26th watcher): every
     micro-batch folds its per-key (count, min_ts, max_ts) into the
@@ -2182,7 +2159,7 @@ def watch_freshness(
         raise ValueError("keys must be non-empty")
     stream = (
         spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .option("maxFilesPerTrigger", MAX_FILES_PER_TRIGGER)
         .parquet(inbox_dir)
     )
 
@@ -2268,7 +2245,6 @@ def watch_calibration(
     score_col: str,
     label_col: str,
     n_bins: int = 10,
-    max_files_per_trigger: int = 1000,
 ):
     """Streaming classifier-calibration monitor (the 27th watcher):
     every micro-batch folds its per-bin (n, positives, fixed-point
@@ -2286,7 +2262,7 @@ def watch_calibration(
         raise ValueError(f"n_bins must be >= 1 (got {n_bins})")
     stream = (
         spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .option("maxFilesPerTrigger", MAX_FILES_PER_TRIGGER)
         .parquet(inbox_dir)
     )
 

@@ -116,3 +116,21 @@ def test_driver_window_order_and_cap():
     # the weaker rows-only check is allowed but must stay deliberate:
     # anything here needs a docstring note in its query function
     assert waived <= getattr(entry_mod, "_NO_ORACLE_OK", waived)
+
+
+def test_plan_node_counts_count_each_node_once():
+    """``explain("formatted")`` prints every node in the tree AND as a
+    numbered detail line; a substring count reads 84 "Exchange" on this
+    capture, the numbered nodes are 25 shuffles + 17 broadcasts."""
+    import os
+
+    capture = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "plans", "r15", "af3_flagship_r15close.txt",
+    )
+    with open(capture) as fh:
+        plan = fh.read()
+    nodes = bench.plan_node_counts(plan)
+    assert plan.count("Exchange") == 84
+    assert (nodes["Exchange"], nodes["BroadcastExchange"]) == (25, 17)
+    assert nodes["AdaptiveSparkPlan"] == 1

@@ -46,6 +46,39 @@ def test_cli_end_to_end(spark, tmp_path):
     assert "model_0.cif" in os.listdir(j0)
 
 
+def test_cli_zero_binders(spark, tmp_path):
+    """A cutoff no job passes: the report is header-only and no
+    structure or PAE side output is written."""
+    corpus_dir = str(tmp_path / "c0")
+    out_dir = str(tmp_path / "o0")
+    write_file_corpus(corpus_dir, n_jobs=2, seed=4)
+    args = build_parser().parse_args(
+        ["-id", corpus_dir, "--output-dir", out_dir, "-pae", "0.0"]
+    )
+    before = _persisted(spark)
+    result = run(args, spark=spark)
+    assert _persisted(spark) - before == set()
+
+    assert result["n_binders"] == 0
+    assert result["n_report_rows"] == 0
+    assert (result["interaction_cifs"], result["overlay_files"],
+            result["pae_csvs"]) == (0, 0, 0)
+    csv = os.path.join(out_dir, "interaction_analysis_PAE_0.0_max_dist_8.0.csv")
+    assert result["csv"] == csv
+    with open(csv) as fh:
+        lines = fh.read().splitlines()
+    assert lines == [
+        "Folder_name,Contact_residues_POI_chain_A,Contact_sequence,"
+        "Interacting_residues_Partner_chain_B,Interacting_sequence"
+    ]
+    # no interaction CIF, overlay model, .pml or PAE CSV: the report is
+    # the only file written
+    written = [
+        os.path.join(d, f) for d, _, files in os.walk(out_dir) for f in files
+    ]
+    assert written == [csv]
+
+
 def test_cli_report_only(spark, tmp_path):
     corpus_dir = str(tmp_path / "c2")
     out_dir = str(tmp_path / "o2")

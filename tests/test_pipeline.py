@@ -268,21 +268,28 @@ def test_contact_distance_is_radius_inclusive(spark):
 
 
 def test_grid_cell_schemes_agree(af3):
-    """8-cell (pitch 2d, half-quantized) and 27-cell (pitch d) grid
-    joins are exact twins — differential over the fixture corpus."""
+    """The pitch-2d, half-quantized 2×2×2 cell scheme is exact at every
+    pitch: across several ``max_dist`` values (so atoms fall at
+    different offsets inside their cells) the grid join equals the
+    brute-force join over the fixture corpus."""
+    from dataclasses import replace
+
     binders = screen_binders(af3["predictions"], PARAMS)
     inter = identify_interacting_residues(
         af3["pae_long"], af3["chains"], PARAMS, jobs=binders
     )
-    g8 = {
-        (r.job, r.partner_res, r.poi_res)
-        for r in contact_pairs_grid(af3["atoms"], inter, PARAMS, cell_scheme="8").collect()
-    }
-    g27 = {
-        (r.job, r.partner_res, r.poi_res)
-        for r in contact_pairs_grid(af3["atoms"], inter, PARAMS, cell_scheme="27").collect()
-    }
-    assert g8 == g27 and len(g8) > 0
+    for max_dist in (5.5, 10.0, 12.0):
+        p = replace(PARAMS, max_dist=max_dist)
+        grid = {
+            (r.job, r.partner_res, r.poi_res)
+            for r in contact_pairs_grid(af3["atoms"], inter, p).collect()
+        }
+        brute = {
+            (r.job, r.partner_res, r.poi_res)
+            for r in contact_pairs_numpy(af3["atoms"], inter, p).collect()
+        }
+        assert grid == brute, max_dist
+        assert len(grid) > 0, max_dist
 
 
 def test_full_report_matches_model_alternate_seed(spark, tmp_path):

@@ -79,6 +79,21 @@ def test_default_width_source_scans_pae_once(spark, af3):
     assert default_plan.count("pae_long.parquet") == 1
 
 
+def test_interaction_report_node_caps(spark, sf_dir):
+    """The flagship ``af3_interaction_report`` plan may not grow: scans,
+    shuffles and broadcasts are capped at the counts this plan had when
+    the screen DAG was given one owner (plans/pipeline.py)."""
+    import bench
+    import __spark_entry__ as entrymod
+
+    report = entrymod.all_queries()["af3_interaction_report"](spark, sf_dir)
+    nodes = bench.plan_node_counts(formatted_plan(report))
+    assert nodes["Scan"] <= 23
+    assert nodes["Exchange"] <= 22
+    assert nodes["BroadcastExchange"] <= 19
+    assert nodes["Scan"] > 0  # the counter read the plan
+
+
 def test_dim_joins_broadcast(spark, sf_dir):
     from process_alphafold3_outputs_spark.plans.driver_queries import (
         revenue_per_nation,

@@ -43,19 +43,15 @@ def test_grid_schemes_match_numpy_on_boundary_heavy_clouds(spark):
         inter = spark.createDataFrame(
             [("j", r) for r in range(1, 61)], "job string, partner_res int"
         )
-        sets = {}
-        for scheme in ("8", "27"):
-            sets[scheme] = {
-                (r.partner_res, r.poi_res)
-                for r in contact_pairs_grid(
-                    atoms, inter, PARAMS, cell_scheme=scheme
-                ).collect()
-            }
+        grid = {
+            (r.partner_res, r.poi_res)
+            for r in contact_pairs_grid(atoms, inter, PARAMS).collect()
+        }
         brute = {
             (r.partner_res, r.poi_res)
             for r in contact_pairs_numpy(atoms, inter, PARAMS).collect()
         }
-        assert sets["8"] == sets["27"] == brute, seed
+        assert grid == brute, seed
         assert len(brute) > 0, seed  # snapped coords guarantee contacts
 
 

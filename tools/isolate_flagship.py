@@ -62,12 +62,14 @@ def main() -> None:
     os.makedirs(plans_dir, exist_ok=True)
     with open(os.path.join(plans_dir, f"af3_flagship_{args.suffix}.txt"), "w") as fh:
         fh.write(plan)
+    nodes = bench.plan_node_counts(plan)
     shape = {
-        "BroadcastHashJoin_nodes": plan.count("BroadcastHashJoin"),
-        "SortMergeJoin_nodes": plan.count("SortMergeJoin"),
-        "CartesianProduct": plan.count("CartesianProduct"),
-        "PythonEval": plan.count("BatchEvalPython") + plan.count("ArrowEvalPython"),
-        "Exchange": plan.count("Exchange"),
+        "BroadcastHashJoin_nodes": nodes["BroadcastHashJoin"],
+        "SortMergeJoin_nodes": nodes["SortMergeJoin"],
+        "CartesianProduct": nodes["CartesianProduct"],
+        "PythonEval": nodes["BatchEvalPython"] + nodes["ArrowEvalPython"],
+        "Exchange": nodes["Exchange"],
+        "BroadcastExchange": nodes["BroadcastExchange"],
     }
 
     def one() -> float:

@@ -69,10 +69,9 @@ def probe(spark, name: str, fn, suffix: str, runs: int, plans_dir: str) -> dict:
     os.makedirs(plans_dir, exist_ok=True)
     with open(os.path.join(plans_dir, f"{name}_{suffix}.txt"), "w") as fh:
         fh.write(plan_txt)
-    n_exchanges = plan_txt.count("Exchange")
-    n_python = sum(
-        plan_txt.count(k) for k in ("BatchEvalPython", "ArrowEvalPython")
-    )
+    nodes = bench.plan_node_counts(plan_txt)
+    n_exchanges = nodes["Exchange"] + nodes["BroadcastExchange"]
+    n_python = nodes["BatchEvalPython"] + nodes["ArrowEvalPython"]
 
     action()  # warmup
     spark.catalog.clearCache()
